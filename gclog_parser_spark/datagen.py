@@ -26,6 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from gclog_parser_spark.fixtures import all_classes
+from gclog_parser_spark.schema import local_frame
 
 #: Markers bracketing the embedded log.  Extraction takes the bytes
 #: strictly between them → byte-identical to the fixture (the per-row
@@ -47,8 +48,8 @@ _FILLER = [
 def fixture_dim(spark):
     """Broadcast dim: (class_id, class_name, fixture_text)."""
     rows = [(cid, name, text) for cid, name, text, _, _ in all_classes()]
-    return spark.createDataFrame(
-        rows, "class_id int, class_name string, fixture_text string"
+    return local_frame(
+        spark, rows, "class_id int, class_name string, fixture_text string"
     )
 
 

@@ -8,8 +8,10 @@ re-shuffles differently than the first attempt.
 
 Protocol (idempotent, at-least-once → exactly-once output):
 
-1. read the ledger (a tiny parquet table next to the output); completed
-   ``chunk_id``s are skipped — this is the resume path.
+1. read the ledger (a tiny parquet table next to the output: n_chunks
+   rows per run) ONCE per run and collect it; its rows give the config
+   check and the completed ``chunk_id``s, which are skipped — this is
+   the resume path.
 2. per pending chunk: run the full pipeline on ``WHERE chunk_id = c``,
    write events with **dynamic partition overwrite** of exactly that
    chunk's subdirectory (``partitionBy(chunk_id)`` + INSERT OVERWRITE
@@ -19,6 +21,12 @@ Protocol (idempotent, at-least-once → exactly-once output):
 3. append one ledger row (chunk lineage: counts from the parse-stage
    accumulators, wall seconds, timestamp) only AFTER the data commit.
    A crash between 2 and 3 re-runs the chunk; step 2 makes that safe.
+   The row is a one-row ``LocalTableScan`` (``schema.local_frame``), so
+   the append writes one file and starts no Python worker.
+
+The returned summary is computed on the driver from rows already in
+hand — the rows read in step 1 plus the rows appended in step 3, the
+latest row per ``chunk_id`` — so the ledger is never re-read.
 
 At 100 TB the chunk count is sized so one chunk ≈ one executor-hour of
 work: big enough to amortize job-start overhead, small enough that a
@@ -30,9 +38,11 @@ from __future__ import annotations
 import time
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Row, SparkSession
 
 from gclog_parser_spark.plans.pipeline import PipelineMetrics, build_events
+from gclog_parser_spark.schema import local_frame
 
 LEDGER_SCHEMA = (
     "chunk_id int, pages bigint, events bigint, skipped_blocks bigint,"
@@ -47,32 +57,26 @@ def with_chunk_id(pages: DataFrame, n_chunks: int) -> DataFrame:
     )
 
 
-def completed_chunks(
+def _ledger_rows(
     spark: SparkSession,
     ledger_path: str,
     n_chunks: int | None = None,
     mode: str | None = None,
     stitch: str | None = None,
-) -> set[int]:
-    """Completed chunk ids from the ledger.  When the current run's
-    config is passed, a prior run recorded under a DIFFERENT
-    (n_chunks, mode, stitch) fails fast: chunk ids are only meaningful
-    under the modulus that produced them — silently skipping ids from
-    an old modulus would both duplicate and drop urls."""
+) -> list[Row]:
+    """Every ledger row (none on a first run).  When the current run's
+    config is passed, a row recorded under a DIFFERENT (n_chunks, mode,
+    stitch) fails fast: chunk ids are only meaningful under the modulus
+    that produced them — silently skipping ids from an old modulus
+    would both duplicate and drop urls."""
     try:
-        rows = (
-            spark.read.parquet(ledger_path)
-            .select("chunk_id", "n_chunks", "mode", "stitch")
-            .distinct()
-            .collect()
-        )
-    except Exception:  # first run: no ledger yet
-        return set()
+        rows = spark.read.parquet(ledger_path).collect()
+    except AnalysisException:  # first run: no ledger yet
+        return []
     if n_chunks is not None:
-        bad = {
-            (r["n_chunks"], r["mode"], r["stitch"])
-            for r in rows
-        } - {(n_chunks, mode, stitch)}
+        bad = {(r["n_chunks"], r["mode"], r["stitch"]) for r in rows} - {
+            (n_chunks, mode, stitch)
+        }
         if bad:
             raise ValueError(
                 f"ledger at {ledger_path} was written with config "
@@ -80,6 +84,19 @@ def completed_chunks(
                 f"{(n_chunks, mode, stitch)} — resume with the same "
                 "config or point at a fresh output/ledger path"
             )
+    return rows
+
+
+def completed_chunks(
+    spark: SparkSession,
+    ledger_path: str,
+    n_chunks: int | None = None,
+    mode: str | None = None,
+    stitch: str | None = None,
+) -> set[int]:
+    """Completed chunk ids from the ledger (config check as in
+    :func:`_ledger_rows`)."""
+    rows = _ledger_rows(spark, ledger_path, n_chunks, mode, stitch)
     return {r["chunk_id"] for r in rows}
 
 
@@ -97,15 +114,15 @@ def run_checkpointed(
     """Run the full pipeline chunk-by-chunk with ledger checkpointing.
 
     Returns a summary dict {chunks_total, chunks_skipped, chunks_run,
-    pages, events, skipped_blocks}.
+    pages, events, skipped_blocks}; the counts sum the latest ledger
+    row per chunk.
     """
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         chunked = with_chunk_id(pages, n_chunks)
-        done = completed_chunks(
-            spark, ledger_path, n_chunks=n_chunks, mode=mode, stitch=stitch
-        )
+        rows = _ledger_rows(spark, ledger_path, n_chunks, mode, stitch)
+        done = {r["chunk_id"] for r in rows}
         ran = []
         for cid in range(n_chunks):
             if cid in done:
@@ -125,49 +142,39 @@ def run_checkpointed(
             ).parquet(out_path)
             wall = time.perf_counter() - t0
             snap = metrics.snapshot()
-            row = [
-                (
-                    cid,
-                    snap["pages"],
-                    snap["events"],
-                    snap["skipped_blocks"],
-                    float(round(wall, 3)),
-                    int(time.time()),
-                    n_chunks,
-                    mode,
-                    stitch,
-                )
-            ]
-            spark.createDataFrame(row, LEDGER_SCHEMA).coalesce(1).write.mode(
+            row = Row(
+                chunk_id=cid,
+                pages=snap["pages"],
+                events=snap["events"],
+                skipped_blocks=snap["skipped_blocks"],
+                wall_seconds=float(round(wall, 3)),
+                finished_at_epoch=int(time.time()),
+                n_chunks=n_chunks,
+                mode=mode,
+                stitch=stitch,
+            )
+            local_frame(spark, [row], LEDGER_SCHEMA).write.mode(
                 "append"
             ).parquet(ledger_path)
+            rows.append(row)
             ran.append(cid)
             if log:
                 log(f"chunk {cid}: {snap} in {wall:.1f}s")
-        from pyspark.sql import Window
-
-        led = spark.read.parquet(ledger_path)
-        w = Window.partitionBy("chunk_id").orderBy(
-            F.desc("finished_at_epoch")
-        )
-        led = led.withColumn("rn", F.row_number().over(w)).where(
-            F.col("rn") == 1
-        )
-        totals = (
-            led.agg(
-                F.sum("pages").alias("pages"),
-                F.sum("events").alias("events"),
-                F.sum("skipped_blocks").alias("skipped_blocks"),
-            )
-            .collect()[0]
-        )
+        # latest row per chunk: the sort is stable, so on a
+        # finished_at_epoch tie the row appended later (this run's) wins
+        latest = {
+            r["chunk_id"]: r
+            for r in sorted(rows, key=lambda r: r["finished_at_epoch"])
+        }
+        totals = {
+            k: sum(r[k] for r in latest.values())
+            for k in ("pages", "events", "skipped_blocks")
+        }
         return {
             "chunks_total": n_chunks,
             "chunks_skipped": len(done),
             "chunks_run": len(ran),
-            "pages": totals["pages"],
-            "events": totals["events"],
-            "skipped_blocks": totals["skipped_blocks"],
+            **totals,
         }
     finally:
         spark.conf.set(

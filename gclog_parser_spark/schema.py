@@ -10,7 +10,9 @@ The dynamic-column shape is reproduced only in the export layer
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pyspark.sql.types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # Input: Common-Crawl-style pages table (BASELINE.json input_hint).
 PAGES_SCHEMA = T.StructType(
@@ -112,11 +114,25 @@ HEAP_REGION_ROWS = [
 HEAP_REGION_SCHEMA = "region_name string, kind string"
 
 
-def collector_family_df(spark):
-    return spark.createDataFrame(
-        COLLECTOR_FAMILY_ROWS, COLLECTOR_FAMILY_SCHEMA
+def local_frame(spark, rows, ddl: str):
+    """A driver-built table (``rows`` of tuples in ``ddl`` column order)
+    as a JVM ``LocalRelation``: the rows cross to the JVM once, as Arrow,
+    and every query that scans the table plans a ``LocalTableScan``.
+    ``createDataFrame(list)`` would instead parallelize a pickled
+    ``PythonRDD``, so each scan of a 1- or 16-row table would start
+    Python-worker tasks.  Names, types, nulls and nullability match the
+    list path (DDL fields are nullable)."""
+    schema = T.StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
     )
+    return spark.createDataFrame(table, schema)
+
+
+def collector_family_df(spark):
+    return local_frame(spark, COLLECTOR_FAMILY_ROWS, COLLECTOR_FAMILY_SCHEMA)
 
 
 def heap_region_df(spark):
-    return spark.createDataFrame(HEAP_REGION_ROWS, HEAP_REGION_SCHEMA)
+    return local_frame(spark, HEAP_REGION_ROWS, HEAP_REGION_SCHEMA)

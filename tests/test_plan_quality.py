@@ -468,3 +468,56 @@ def test_crawl_budget_host_rank_is_host_sized(pages):
     # and the host-sized rank+leftover window — both ∝ hosts/scalars,
     # never pages
     assert len(re.findall(r"Exchange SinglePartition", plan)) == 2
+
+
+def test_driver_dims_are_local_relations(spark, pages):
+    """Every driver-built table on the production path is a JVM
+    LocalRelation: the dim join broadcasts a LocalTableScan, and no
+    query that scans a dim starts Python-worker tasks for it (a
+    ``createDataFrame(list)`` table plans as ``Scan ExistingRDD`` over
+    a pickled PythonRDD)."""
+    from pyspark.sql import Row
+
+    from gclog_parser_spark.datagen import fixture_dim
+    from gclog_parser_spark.fixtures import all_classes
+    from gclog_parser_spark.plans.ledger import LEDGER_SCHEMA
+    from gclog_parser_spark.plans.pipeline import build_events
+    from gclog_parser_spark.schema import (
+        COLLECTOR_FAMILY_ROWS,
+        COLLECTOR_FAMILY_SCHEMA,
+        HEAP_REGION_ROWS,
+        HEAP_REGION_SCHEMA,
+        collector_family_df,
+        heap_region_df,
+        local_frame,
+    )
+
+    lines = plan_of(build_events(pages)).splitlines()
+    assert not any("Scan ExistingRDD" in l for l in lines)
+    under = [
+        nxt.strip()
+        for l, nxt in zip(lines, lines[1:])
+        if "BroadcastExchange" in l
+    ]
+    assert under and all(u.startswith("+- LocalTableScan") for u in under)
+
+    # same names, types, nullability, nulls and rows as the list path
+    ledger_row = Row(
+        chunk_id=3, pages=10, events=None, skipped_blocks=0,
+        wall_seconds=1.5, finished_at_epoch=1700000000,
+        n_chunks=8, mode="gc_line", stitch=None,
+    )
+    fixture_rows = [(c, n, t) for c, n, t, _, _ in all_classes()]
+    for built, rows, ddl in [
+        (collector_family_df(spark), COLLECTOR_FAMILY_ROWS,
+         COLLECTOR_FAMILY_SCHEMA),
+        (heap_region_df(spark), HEAP_REGION_ROWS, HEAP_REGION_SCHEMA),
+        (local_frame(spark, [ledger_row], LEDGER_SCHEMA), [ledger_row],
+         LEDGER_SCHEMA),
+        (fixture_dim(spark), fixture_rows,
+         "class_id int, class_name string, fixture_text string"),
+    ]:
+        want = spark.createDataFrame(rows, ddl)
+        assert built.schema == want.schema
+        assert built.collect() == want.collect()
+        assert "LocalTableScan" in plan_of(built)

@@ -63,11 +63,40 @@ def test_checkpoint_resume(spark, sf_dir, tmp_path):
     assert summary["chunks_run"] == 2
     assert summary["events"] == want
     assert spark.read.parquet(out).count() == want
+    # the summary's counts equal an uninterrupted run's ...
+    one_shot = run_checkpointed(
+        spark, pages, str(tmp_path / "events1"), str(tmp_path / "ledger1"),
+        n_chunks=4,
+    )
+    for k in ("pages", "events", "skipped_blocks"):
+        assert summary[k] == one_shot[k], k
+    # ... and a Spark read-back of the ledger (latest row per chunk)
+    assert _ledger_totals(spark, ledger) == {
+        k: summary[k] for k in ("pages", "events", "skipped_blocks")
+    }
 
     # fully idempotent third run: nothing to do, totals unchanged
     summary = run_checkpointed(spark, pages, out, ledger, n_chunks=4)
     assert summary["chunks_run"] == 0
     assert summary["events"] == want
+    assert _ledger_totals(spark, ledger) == {
+        k: summary[k] for k in ("pages", "events", "skipped_blocks")
+    }
+
+
+def _ledger_totals(spark, ledger_path):
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("chunk_id").orderBy(F.desc("finished_at_epoch"))
+    latest = (
+        spark.read.parquet(ledger_path)
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+    )
+    row = latest.agg(
+        *[F.sum(k).alias(k) for k in ("pages", "events", "skipped_blocks")]
+    ).collect()[0]
+    return row.asDict()
 
 
 def test_ledger_config_mismatch_fails_fast(spark, sf_dir, tmp_path):
